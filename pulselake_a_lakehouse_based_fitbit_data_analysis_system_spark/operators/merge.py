@@ -1,12 +1,36 @@
 """Merge/upsert library — the reference's write-path operators (A4-A12).
 
-Every reference MERGE is one of four shapes (SURVEY §2.8):
-- insert-only            (users, workouts, heart_rate, completed_workouts,
-                          workout_bpm: A4, A7, A8, A10, A11)
-- conditional update     (gym_logs late-logout corrections: A5)
-- SCD-1 upsert           (user_bins unconditional: A9; user_profile
-                          CDC-ranked + ``updated < updated`` guard: A6)
-- full upsert w/ columns (workout_bpm_summary: A12)
+Every silver and gold write in the reference is one MERGE grammar:
+WHEN MATCHED [AND cond] UPDATE, WHEN NOT MATCHED INSERT
+(``Silver/05-silver.py:50-55, 108-115, 159-167``,
+``Gold/06-gold.py:31-80``), plus the delete and history clauses a CDC
+feed needs. ``TableStore.merge`` names each case a policy; the
+arguments in brackets are required (``MERGE_POLICIES``):
+
+- insert_only          WHEN NOT MATCHED INSERT (users, workouts,
+                       heart_rate, completed_workouts, workout_bpm:
+                       A4, A7, A8, A10, A11)
+- scd1                 newest record per key wins; with ``order_col``
+                       only when strictly newer (user_bins: A9;
+                       user_profile CDC-ranked: A6)
+- conditional_update   WHEN MATCHED AND cond UPDATE SET cols
+  [update_condition,   (gym_logs late-logout corrections: A5)
+   update_cols]
+- full_upsert          WHEN MATCHED UPDATE SET ``update_cols``
+                       (workout_bpm_summary: A12); every column when
+                       omitted, which is scd1
+- upsert_delete        full_upsert after deleting the tomb keys, in
+  [tombs]              one commit (mixed CDC batches)
+- cdc_versioned        order-robust I/U/D changelog application,
+  [seq_col]            delete tombstones kept in the table
+- scd2                 full-history version table, optional
+  [seq_col]            ``tiebreak_col``
+
+``plan_merge`` is the one map from a policy to its post-merge
+DataFrame plan. Every ``TableStore`` path calls it: a table's first
+merge plans against an empty table shaped like the result, an
+unpartitioned merge against the table, a partition-pruned merge
+against the affected partitions.
 
 Design: merge *semantics* are pure DataFrame→DataFrame functions
 (compute the post-merge state), so they are testable and
@@ -17,8 +41,10 @@ gated behind an import-try. The pure-DataFrame forms are how the
 engine expresses merges over plain parquet.
 
 Scale notes: each merge is (a) an optional per-key latest-record
-reduction of the source (small), then (b) ONE shuffle join between
-source and target on the merge key. Insert-only is a left-anti join +
+reduction of the source (small), then (b) ONE shuffle between source
+and target on the merge key — a window over their union for the
+window-shaped policies (scd1, full_upsert without ``update_cols``,
+cdc_versioned), a join for the rest. Insert-only is a left-anti join +
 union (no target rewrite needed under Delta; full rewrite under plain
 parquet). The reference's rank-before-merge trick
 (``Silver/05-silver.py:28-32``) is ``dedup.latest_by_key`` applied to
@@ -99,6 +125,16 @@ def _check_columns(target: DataFrame, source: DataFrame) -> None:
     missing = set(target.columns) - set(source.columns)
     if missing:
         raise ValueError(f"source is missing target columns: {sorted(missing)}")
+
+
+def _cast_columns(df: DataFrame, cols: Sequence[str], fields: dict) -> DataFrame:
+    """``df`` with each of ``cols`` it carries cast to its type in
+    ``fields`` (name → DataType)."""
+    for c in cols:
+        want = fields.get(c)
+        if want is not None and c in df.columns and df.schema[c].dataType != want:
+            df = df.withColumn(c, F.col(c).cast(want))
+    return df
 
 
 def align_for_evolution(
@@ -207,32 +243,20 @@ def merge_scd1(
     merge instead of two — at 100 TB that is half the merge's network
     bytes. The output keeps ``col_name``."""
     _check_columns(target, source)
-    src = source.select(*target.columns)
-    if order_col is None:
-        # source wins unconditionally on key match
-        tagged = target.withColumn("__pri", F.lit(0)).unionByName(
-            src.withColumn("__pri", F.lit(1))
-        )
-        extra: list[str] = []
-        if cluster_into is not None:
-            name, expr = cluster_into
-            tagged = tagged.withColumn(name, expr).repartition(F.col(name))
-            extra = [name]
-        return latest_by_key(
-            tagged, keys, "__pri", extra_partition_cols=extra
-        ).drop("__pri")
-    # strictly-newer-wins: tie goes to the target (__pri 0 sorts after 1
-    # descending? we want target to win ties → give target higher pri)
-    tagged = target.withColumn("__pri", F.lit(1)).unionByName(
-        src.withColumn("__pri", F.lit(0))
+    # without order_col the source wins every key match; with it the
+    # newest order_col wins and the target wins ties
+    t_pri, s_pri = (0, 1) if order_col is None else (1, 0)
+    tagged = target.withColumn("__pri", F.lit(t_pri)).unionByName(
+        source.select(*target.columns).withColumn("__pri", F.lit(s_pri))
     )
-    extra = []
+    extra: list[str] = []
     if cluster_into is not None:
         name, expr = cluster_into
         tagged = tagged.withColumn(name, expr).repartition(F.col(name))
         extra = [name]
+    sort_by, ties = ("__pri", []) if order_col is None else (order_col, ["__pri"])
     return latest_by_key(
-        tagged, keys, order_col, tiebreakers=["__pri"], extra_partition_cols=extra
+        tagged, keys, sort_by, tiebreakers=ties, extra_partition_cols=extra
     ).drop("__pri")
 
 
@@ -242,7 +266,6 @@ def merge_conditional_update(
     keys: Sequence[str],
     update_condition: Callable[[DataFrame, DataFrame], Column],
     update_cols: Sequence[str],
-    source_order: str | None = None,
 ) -> DataFrame:
     """WHEN MATCHED AND <cond> THEN UPDATE SET <cols>, WHEN NOT MATCHED
     INSERT * — the gym_logs late-logout merge (A5,
@@ -254,8 +277,6 @@ def merge_conditional_update(
     """
     _check_columns(target, source)
     src = source.select(*target.columns)
-    if source_order is not None:
-        src = latest_by_key(src, keys, source_order)
     a, b = target.alias("a"), src.alias("b")
     cond = update_condition(a, b)
     matched = [F.col(f"b.{k}").isNotNull() for k in keys]
@@ -276,36 +297,6 @@ def merge_conditional_update(
         ]
     )
     inserts = src.join(target, list(keys), "left_anti")
-    return updated.unionByName(inserts)
-
-
-def merge_full_upsert(
-    target: DataFrame,
-    source: DataFrame,
-    keys: Sequence[str],
-    update_cols: Sequence[str] | None = None,
-    cluster_into: tuple[str, Column] | None = None,
-) -> DataFrame:
-    """Matched→UPDATE SET <measure cols>, not-matched→INSERT — the gold
-    summary merge (A12, ``Gold/06-gold.py:31-80``), needed because a
-    streaming agg in update mode re-emits growing sessions. With
-    ``update_cols=None`` all non-key columns update (== SCD-1).
-    ``cluster_into`` fuses the merge shuffle with the partitioned
-    write (see ``merge_scd1``); only the window form supports it."""
-    if update_cols is None:
-        return merge_scd1(target, source, keys, cluster_into=cluster_into)
-    non_update = [c for c in target.columns if c not in update_cols]
-    a, b = target.alias("a"), source.select(*target.columns).alias("b")
-    joined = a.join(b, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys], "left")
-    is_matched = F.col(f"b.{keys[0]}").isNotNull()
-    updated = joined.select(
-        *[F.col(f"a.{c}").alias(c) for c in non_update],
-        *[
-            F.when(is_matched, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}")).alias(c)
-            for c in update_cols
-        ],
-    ).select(*target.columns)
-    inserts = source.select(*target.columns).join(target, list(keys), "left_anti")
     return updated.unionByName(inserts)
 
 
@@ -349,7 +340,7 @@ def merge_apply_cdc(
     # null-safe keep-filter: a malformed change row with NULL op must
     # UPSERT, not vanish — `op != delete_op` evaluates NULL for NULL op,
     # which would drop the row from upserts while the anti-join below
-    # still removes its key from the target (silent delete; ADVICE r4)
+    # still removes its key from the target (a silent delete)
     upserts = latest.filter(~F.col(op_col).eqNullSafe(delete_op)).select(
         *target.columns
     )
@@ -363,45 +354,38 @@ def apply_cdc_versioned(
     keys: Sequence[str],
     seq_col: str,
     op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Order-ROBUST I/U/D application for incremental pipelines: the
-    target table keeps each row's ``seq_col`` (and an ``op_col``
-    tombstone), so a change batch arriving LATE (lower sequence than
-    what the table already holds) is correctly ignored — the guard
-    ``merge_apply_cdc`` does not have, and the reason a streaming
-    foreachBatch CDC applier needs this variant.
+    target table keeps each row's ``seq_col`` (and its op column, so
+    a delete stays as a tombstone row), so a change batch arriving
+    LATE (lower sequence than what the table already holds) is
+    correctly ignored — the guard ``merge_apply_cdc`` does not have,
+    and the reason a streaming foreachBatch CDC applier needs this
+    variant.
 
     Semantics: union target and batch, keep the highest-``seq_col``
     record per key (target wins ties — already-applied data beats a
     replayed duplicate), keep delete tombstones IN the table so a
     late pre-delete update cannot resurrect the key; readers filter
-    ``op != delete_op``. Result is invariant under ANY split of the
-    changelog into batches, in any order (property-tested) — exactly
-    once per key regardless of delivery.
+    the delete op out (``op <> 'D'``). The ``op_col`` column is
+    carried, never read; the parameter only names it. Result is
+    invariant under ANY split of the changelog into batches, in any
+    order (property-tested) — exactly once per key regardless of
+    delivery.
 
-    Cost: one window shuffle over target+batch. Under ``TableStore``
-    the partitioned merge prunes that to affected partitions/files.
-    Compact tombstones by age out-of-band when the upstream can no
-    longer replay below a watermark.
+    That is ``merge_scd1`` ordered by ``seq_col`` over a change batch
+    with exactly the table's columns. Cost: one window shuffle over
+    target+batch. Under ``TableStore`` the partitioned merge prunes
+    that to affected partitions/files. Compact tombstones by age
+    out-of-band when the upstream can no longer replay below a
+    watermark.
     """
-    cols = list(target.columns)
-    if set(cols) != set(changes.columns):
+    if set(target.columns) != set(changes.columns):
         raise ValueError(
-            f"target/changes schemas differ: {sorted(cols)} vs "
+            f"target/changes schemas differ: {sorted(target.columns)} vs "
             f"{sorted(changes.columns)}"
         )
-    tagged = target.withColumn("__pri", F.lit(1)).unionByName(
-        changes.select(*cols).withColumn("__pri", F.lit(0))
-    )
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(seq_col).desc(), F.col("__pri").desc()
-    )
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*cols)
-    )
+    return merge_scd1(target, changes, keys, order_col=seq_col)
 
 
 def scd2_from_changes(
@@ -513,6 +497,79 @@ def scd2_merge_batch(
     )
     untouched = target.join(affected, key_list, "left_anti")
     return untouched.unionByName(rebuilt.select(*target.columns))
+
+
+# Each merge policy and the ``TableStore.merge`` arguments it requires.
+MERGE_POLICIES: dict[str, dict[str, str]] = {
+    "insert_only": {},
+    "scd1": {},
+    "conditional_update": {
+        "update_condition": "<(target, source) -> Column>",
+        "update_cols": "<columns the matched update sets>",
+    },
+    "full_upsert": {},
+    "upsert_delete": {"tombs": "<DataFrame of key column(s) to delete>"},
+    "cdc_versioned": {"seq_col": "<monotonic ordering column>"},
+    "scd2": {"seq_col": "<monotonic ordering column>"},
+}
+
+
+def plan_merge(
+    policy: str,
+    target: DataFrame | None,
+    source: DataFrame,
+    keys: Sequence[str],
+    tomb_keys: DataFrame | None = None,
+    cluster_into: tuple[str, Column] | None = None,
+    *,
+    order_col: str | None = None,
+    update_condition: Callable[[DataFrame, DataFrame], Column] | None = None,
+    update_cols: Sequence[str] | None = None,
+    seq_col: str | None = None,
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """The post-merge state of ``target`` under ``policy``: the one
+    map from a policy name to its DataFrame plan.
+
+    ``target=None`` is a table's first merge. It plans against an
+    empty table shaped like the result, so the first batch commits
+    exactly what merging it into an existing empty table would — one
+    row per key for the window-shaped policies. ``tomb_keys`` (distinct
+    key rows) are deleted from the target before the upsert, which is
+    upsert_delete's fused delete. ``cluster_into`` fuses the window
+    shuffle with the caller's partition clustering (see ``merge_scd1``);
+    only the window forms take it, the shapes
+    ``fuse_window_with_clustering`` admits.
+    """
+    if target is None:
+        target = source.limit(0)
+        if policy == "scd2":
+            target = scd2_from_changes(
+                target, keys, seq_col, tiebreak_col=tiebreak_col
+            )
+    if tomb_keys is not None:
+        from .joins import maybe_broadcast
+
+        target = target.join(maybe_broadcast(tomb_keys), list(keys), "left_anti")
+    if policy == "insert_only":
+        return merge_insert_only(target, source, keys)
+    if policy == "scd1":
+        return merge_scd1(target, source, keys, order_col, cluster_into)
+    if policy in ("full_upsert", "upsert_delete"):
+        if not update_cols:
+            return merge_scd1(target, source, keys, cluster_into=cluster_into)
+        return merge_conditional_update(
+            target, source, keys, lambda a, b: F.lit(True), update_cols
+        )
+    if policy == "conditional_update":
+        return merge_conditional_update(
+            target, source, keys, update_condition, update_cols
+        )
+    if policy == "cdc_versioned":
+        return apply_cdc_versioned(target, source, keys, seq_col)
+    if policy == "scd2":
+        return scd2_merge_batch(target, source, keys, seq_col, tiebreak_col)
+    raise ValueError(f"unknown merge policy {policy!r}")
 
 
 def point_in_time_join(
@@ -3918,6 +3975,27 @@ class TableStore:
             self._release_pins(_idpins)
         self._write_file_stats(self.current_path(name), keys[0])
 
+    @staticmethod
+    def _link_files(src_dir: str, dst_dir: str, skip: set[str]) -> None:
+        """Hard-link every file of ``src_dir`` into ``dst_dir`` except
+        the ``skip`` files and their ``.crc`` checksums (byte-identical,
+        no data movement). ``dst_dir`` is created only when something
+        links, so a partition whose every file is skipped stays gone."""
+        keep = [
+            fname
+            for fname in os.listdir(src_dir)
+            if fname not in skip
+            and not (
+                fname.startswith(".")
+                and fname.endswith(".crc")
+                and fname[1:-4] in skip
+            )
+        ]
+        if keep:
+            os.makedirs(dst_dir, exist_ok=True)
+        for fname in keep:
+            os.link(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
+
     def _merge_partitioned(
         self,
         name: str,
@@ -3925,9 +4003,10 @@ class TableStore:
         keys: Sequence[str],
         policy: str,
         spec: dict,
-        **kwargs,
+        tombs: DataFrame | None = None,
+        evolve_schema: bool = False,
+        **policy_args,
     ) -> None:
-        tombs = kwargs.pop("tombs", None)
         # ONE snapshot resolution for the whole merge: schema read,
         # data read, stats read and the commit's based_on all pin to
         # the same version dir.
@@ -3937,41 +4016,22 @@ class TableStore:
         # type-sensitive (xxhash64(int 3) != xxhash64(bigint 3)), so an
         # int-typed CDC batch merged into a bigint-keyed table would
         # land its rows in the WRONG partition — a silent duplicate on
-        # upsert, a silent miss on delete. Join coercion used to paper
-        # over this for the policy itself; the partition routing never
-        # had that safety net.
+        # upsert, a silent miss on delete. Join coercion would hide the
+        # mismatch from the policy's own join, never from the
+        # partition routing.
         # logical view of the stored schema (column mapping applied):
         # merge keys arrive as LOGICAL names
         tfields = self._logical_fields(current)
+        pcol = spec["column"] if spec["mode"] == "column" else None
         if tfields is not None:
-            for k in keys:
-                want = tfields.get(k)
-                if want is not None and source.schema[k].dataType != want:
-                    source = source.withColumn(k, F.col(k).cast(want))
-                if (
-                    tombs is not None
-                    and want is not None
-                    and k in tombs.columns
-                    and tombs.schema[k].dataType != want
-                ):
-                    tombs = tombs.withColumn(k, F.col(k).cast(want))
-            # column-mode tombs may carry the partition column (it is
-            # what routes the delete) — canonicalize its dtype too
-            pc = spec.get("column") if spec.get("mode") == "column" else None
-            if tombs is not None and pc is not None and pc in tombs.columns:
-                want = tfields.get(pc)
-                if want is not None and tombs.schema[pc].dataType != want:
-                    tombs = tombs.withColumn(pc, F.col(pc).cast(want))
-        if policy == "upsert_delete":
-            if tombs is None:
-                raise ValueError(
-                    "policy='upsert_delete' requires tombs=<DataFrame of "
-                    "key column(s) to delete>"
+            source = _cast_columns(source, keys, tfields)
+            if tombs is not None:
+                # column-mode tombs may carry the partition column (it
+                # is what routes the delete) — canonicalize it too
+                tombs = _cast_columns(
+                    tombs, [*keys, pcol] if pcol else keys, tfields
                 )
-            if kwargs.get("evolve_schema"):
-                raise ValueError(
-                    "evolve_schema is not supported with upsert_delete"
-                )
+        if tombs is not None:
             # fold the tomb keys into the source as NULL-payload marker
             # rows so ONE pass yields the affected partitions and key
             # bounds of BOTH sides (files holding doomed keys must
@@ -3980,7 +4040,6 @@ class TableStore:
             # must carry it and it survives the fold; hash mode derives
             # __bucket from the keys, so keys alone suffice there.
             tomb_cols = list(keys)
-            pcol = spec["column"] if spec["mode"] == "column" else None
             if pcol is not None and pcol not in keys:
                 if pcol not in tombs.columns:
                     raise ValueError(
@@ -3990,33 +4049,23 @@ class TableStore:
                         "its partition"
                     )
                 tomb_cols.append(pcol)
-            tomb_rows = tombs.select(
-                *[F.col(c) for c in tomb_cols]
-            ).distinct()
-            for c in source.columns:
-                if c not in tomb_cols:
-                    tomb_rows = tomb_rows.withColumn(
-                        c, F.lit(None).cast(source.schema[c].dataType)
-                    )
             source = source.withColumn("__tomb", F.lit(False)).unionByName(
-                tomb_rows.select(*source.columns).withColumn(
-                    "__tomb", F.lit(True)
-                )
+                tombs.select(*tomb_cols).distinct().withColumn("__tomb", F.lit(True)),
+                allowMissingColumns=True,
             )
-        part_col = "__bucket" if spec["mode"] == "hash" else spec["column"]
-        if spec["mode"] == "hash":
-            src = source.withColumn(part_col, self._partition_expr(spec, keys))
-        else:
-            src = source
+        part_col = pcol or "__bucket"
+        src = source if pcol else source.withColumn(
+            part_col, self._partition_expr(spec, keys)
+        )
         # ONE source evaluation yields both the affected-partition set
         # AND (for integral keys) each partition's source-key bounds —
         # metadata-scale collect (bounded by n_buckets / partition
         # cardinality), the one deliberate driver job before the write.
-        # Earlier rounds ran a SECOND source evaluation (distinct
-        # source keys broadcast-joined against the file-stats frame)
-        # for exact per-key file pruning; on wide merges that job cost
-        # more than the pruning it bought (~1.3 s per star-IVM view
-        # merge at sf0.1, pruning nothing because the increment spans
+        # Exact per-key file pruning would need a SECOND source
+        # evaluation (distinct source keys broadcast-joined against the
+        # file-stats frame); on wide merges that job costs more than
+        # the pruning it buys (~1.3 s per star-IVM view merge at sf0.1,
+        # pruning nothing because the increment spans
         # the key range). Per-partition [min, max] range-intersect
         # prunes identically for the shapes that matter (point
         # lookups, per-key trickle batches, contiguous backfills) and
@@ -4052,8 +4101,8 @@ class TableStore:
         # rest are hard-linked. Applies when the sidecar matches
         # keys[0], the key is integral, and every affected partition
         # value maps to its dir name without Spark's escape encoding;
-        # otherwise all files of affected partitions rewrite (the
-        # round-2 behavior — still correct).
+        # otherwise all files of affected partitions rewrite (more
+        # rewriting, still correct).
         affected_dirs: dict[str, object] = {}
         all_simple = True
         for v in affected:
@@ -4063,7 +4112,7 @@ class TableStore:
                 affected_dirs = {}
                 break
             affected_dirs[d] = v
-        if policy == "upsert_delete" and not all_simple:
+        if tombs is not None and not all_simple:
             # an affected partition can be EMPTIED by the fused delete
             # (no scratch output dir), and the link phase must then
             # know its dir name to avoid resurrecting it wholesale —
@@ -4102,7 +4151,6 @@ class TableStore:
                         # files hard-link, the merged write still adds
                         # the partition's new rows
                         hit_by_dir.setdefault(d, set()).add(fname)
-        if use_stats:
             hit_paths = [
                 os.path.join(current, d, fname)
                 for d, fnames in hit_by_dir.items()
@@ -4123,101 +4171,39 @@ class TableStore:
                 )
             else:
                 target_affected = target_all.filter(F.lit(False))
-            if spec["mode"] == "hash":
-                target_affected = target_affected.drop(part_col)
         else:
             # Partition pruning: the filter on the partition column
             # reaches the scan, so unaffected partitions are never read.
-            target_affected = target_all.filter(
-                F.col(part_col).isin(affected)
-            ).drop(part_col) if spec["mode"] == "hash" else target_all.filter(
-                F.col(part_col).isin(affected)
-            )
-        src_plain = src.drop(part_col) if spec["mode"] == "hash" else src
-        if kwargs.pop("evolve_schema", False):
-            target_affected, src_plain = align_for_evolution(
-                target_affected, src_plain
-            )
-        # Window-shaped policies (scd1 / full_upsert / upsert_delete
-        # without update_cols) fuse their one window shuffle with the
-        # scratch write's partition clustering: in HASH mode part_col
-        # is a deterministic function of the merge keys, so windowing
-        # by (part_col, *keys) forms identical groups while the union
-        # is exchanged ONCE on part_col — the post-policy
-        # repartition(part_col) below is then skipped. One full-data
-        # exchange per merge instead of two (guide §2.4). Column-mode
-        # partitions are NOT key-determined, so they keep the
-        # two-exchange form (windowing by them would change groups).
-        # Parallelism guard (guide §2): the fused exchange hashes on
-        # the bucket column ALONE, so at most n_buckets reduce tasks
-        # ever carry rows — on an under-bucketed table that collapses
-        # the window sort's parallelism below the cluster's width.
-        # Fuse only when the declared bucket count can occupy every
-        # core; otherwise keep the two-exchange form (full-width
-        # window keyed by the merge keys, then the clustering
-        # exchange), trading the extra exchange for parallelism.
+            target_affected = target_all.filter(F.col(part_col).isin(affected))
+        if spec["mode"] == "hash":
+            target_affected = target_affected.drop(part_col)
+        if evolve_schema:
+            target_affected, source = align_for_evolution(target_affected, source)
+        tomb_keys = None
+        if tombs is not None:
+            tomb_keys = source.filter(F.col("__tomb")).select(*keys).distinct()
+            source = source.filter(~F.col("__tomb")).drop("__tomb")
+        # Window-shaped policies on a hash-bucketed table with enough
+        # buckets exchange their union ONCE on part_col, and the
+        # clustering repartition(part_col) below is then skipped (see
+        # fuse_window_with_clustering for when that is sound).
         cluster_into = None
         if fuse_window_with_clustering(
             spec,
             policy,
-            kwargs.get("update_cols"),
+            policy_args.get("update_cols"),
             self.spark.sparkContext.defaultParallelism,
         ):
             cluster_into = (part_col, self._partition_expr(spec, keys))
-        if policy == "insert_only":
-            merged = merge_insert_only(target_affected, src_plain, keys)
-        elif policy == "scd1":
-            merged = merge_scd1(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs.get("order_col"),
-                cluster_into=cluster_into,
-            )
-        elif policy == "conditional_update":
-            merged = merge_conditional_update(target_affected, src_plain, keys, **kwargs)
-        elif policy == "full_upsert":
-            merged = merge_full_upsert(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs.get("update_cols"),
-                cluster_into=cluster_into,
-            )
-        elif policy == "upsert_delete":
-            from .joins import maybe_broadcast
-
-            t_keys = src_plain.filter(F.col("__tomb")).select(*keys).distinct()
-            ups = src_plain.filter(~F.col("__tomb")).drop("__tomb")
-            survivors = target_affected.join(
-                maybe_broadcast(t_keys), list(keys), "left_anti"
-            )
-            merged = merge_full_upsert(
-                survivors,
-                ups,
-                keys,
-                kwargs.get("update_cols"),
-                cluster_into=cluster_into,
-            )
-        elif policy == "cdc_versioned":
-            merged = apply_cdc_versioned(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("op_col", "op"),
-                kwargs.get("delete_op", "D"),
-            )
-        elif policy == "scd2":
-            merged = scd2_merge_batch(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("tiebreak_col"),
-            )
-        else:
-            raise ValueError(f"unknown policy {policy!r}")
+        merged = plan_merge(
+            policy,
+            target_affected,
+            source,
+            keys,
+            tomb_keys,
+            cluster_into,
+            **policy_args,
+        )
         # CHECK constraints validate the affected partitions' NEW
         # content before any scratch write or commit (the partitioned
         # path bypasses write(), so it hooks here; no-op without
@@ -4225,41 +4211,24 @@ class TableStore:
         self._enforce_constraints(name, merged)
         if spec["mode"] == "hash" and cluster_into is None:
             merged = merged.withColumn(part_col, self._partition_expr(spec, keys))
-        # Write ONLY the affected partitions to a scratch dir. No
-        # per-merge range clustering: a trickle batch's output is tiny
-        # and an extra exchange per micro-batch measurably hurts (the
-        # fitbit E2E replay paid ~40% wall for it); the new files'
-        # bounds are still footer-recorded in the sidecar, so later
-        # merges prune against them correctly — range DISJOINTNESS
-        # (maximal skipping) is established at write_partitioned and
-        # re-established by optimize(), the compaction cadence any
-        # trickle-merged table needs anyway.
+        # Write ONLY the affected partitions to a scratch dir,
+        # clustered BY THE PARTITION COLUMN: the merge plan's final
+        # shuffle is keyed by the merge key, so without it every reduce
+        # task writes a sliver into EVERY affected dir (~tasks x dirs
+        # small files that every later scan, footer-stat read and merge
+        # pays for). One plain hash exchange on part_col writes one file
+        # per affected partition. No range clustering: its extra
+        # exchange and sampling job per micro-batch cost the fitbit E2E
+        # trickle replay ~40% of its wall; the new files' bounds still
+        # land in the sidecar, and optimize() restores range
+        # disjointness. Rewritten files carry PHYSICAL column names to
+        # stay byte-compatible with the hard-linked survivors
+        # (evolution-added logical columns extend the mapping here).
         scratch = os.path.join(self.root, f"{name}.merge{uuid.uuid4().hex[:12]}")
-        # Cluster the scratch write BY THE PARTITION COLUMN: the merge
-        # plan's final shuffle is keyed by the merge key, so without
-        # this every reduce task writes a sliver into EVERY affected
-        # dir — one wide merge over a 32-bucket table leaves
-        # ~tasks x dirs (1000+) small files, and every later scan,
-        # footer-stat read and downstream merge pays for them (the
-        # round-10 star-IVM lifecycle spent most of its wall on
-        # exactly that). One hash exchange on part_col bounds output
-        # at one file per affected partition; writer parallelism =
-        # affected dirs, the same cost-follows-deltas shape as the
-        # rewrite itself (size n_buckets >= cluster parallelism at
-        # scale). Plain hash repartition, NOT repartitionByRange: the
-        # range sampler adds a whole extra job per merge, which the
-        # fitbit E2E trickle replay measured at ~40% wall.
-        # rewritten files must stay byte-compatible with the version's
-        # hard-linked survivors: write PHYSICAL column names (the
-        # column mapping lifts them back at read; evolution-added
-        # logical columns extend the mapping here)
         merged, cm_out = self._to_physical(
             merged, self._load_colmap(current)
         )
-        if cluster_into is None:
-            # window-fused policies arrive already exchanged once on
-            # part_col (cluster_into above); everything else pays the
-            # clustering exchange here
+        if cluster_into is None:  # fused policies are clustered already
             merged = merged.repartition(F.col(part_col))
         merged.write.mode("overwrite").partitionBy(part_col).parquet(scratch)
         merged_schema_src = merged
@@ -4281,60 +4250,25 @@ class TableStore:
         for entry in rewritten:
             os.rename(os.path.join(scratch, entry), os.path.join(full, entry))
         shutil.rmtree(scratch, ignore_errors=True)
+        # partitions the fused delete EMPTIED have no scratch dir but
+        # their content changed; linking them wholesale would resurrect
+        # the deleted keys, and conflict detection must see them as
+        # rewritten
+        touched = set(rewritten)
+        if tombs is not None:
+            touched |= set(affected_dirs)
         for entry in os.listdir(current):
             src_path = os.path.join(current, entry)
             if not os.path.isdir(src_path) or entry == self._STAGED_DIR:
                 continue
-            if entry in rewritten:
+            if entry in touched:
                 if not use_stats:
                     continue  # whole partition was rewritten
-                hit = hit_by_dir.get(entry, set())
-                for fname in os.listdir(src_path):
-                    if fname in hit:
-                        continue  # rewritten content; fresh file has it
-                    if (
-                        fname.startswith(".")
-                        and fname.endswith(".crc")
-                        and fname[1:-4] in hit
-                    ):
-                        continue  # checksum of a rewritten file
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(full, entry, fname),
-                    )
-            elif policy == "upsert_delete" and entry in affected_dirs:
-                # affected partition whose post-merge state produced NO
-                # scratch output: the fused delete emptied its rewritten
-                # content (all of it when unpruned; its HIT files under
-                # file pruning). Linking it wholesale would resurrect
-                # the deleted keys — link only the non-hit survivors.
-                if not use_stats:
-                    continue  # fully rewritten to empty
-                hit = hit_by_dir.get(entry, set())
-                keep = [
-                    fname
-                    for fname in os.listdir(src_path)
-                    if fname not in hit
-                    and not (
-                        fname.startswith(".")
-                        and fname.endswith(".crc")
-                        and fname[1:-4] in hit
-                    )
-                ]
-                if keep:
-                    os.makedirs(os.path.join(full, entry))
-                    for fname in keep:
-                        os.link(
-                            os.path.join(src_path, fname),
-                            os.path.join(full, entry, fname),
-                        )
+                # the rewritten files' fresh content is in the new dir
+                skip = hit_by_dir.get(entry, set())
             else:
-                os.makedirs(os.path.join(full, entry))
-                for fname in os.listdir(src_path):
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(full, entry, fname),
-                    )
+                skip = set()
+            self._link_files(src_path, os.path.join(full, entry), skip)
         # refresh the data-skipping sidecar: linked files carry their
         # bounds over (same relative path), new files pay a footer read
         carry = (
@@ -4348,12 +4282,6 @@ class TableStore:
         self._write_schema(full, merged_schema_src)
         self._write_colmap(full, cm_out)
         self._write_op(full, f"merge:{policy}")
-        touched = set(rewritten)
-        if policy == "upsert_delete":
-            # partitions the fused delete EMPTIED have no scratch dir
-            # but their content changed — conflict detection must see
-            # them as rewritten
-            touched |= set(affected_dirs)
         self._write_rewritten(full, touched, os.path.basename(current))
         if self._changelog_enabled(name):
             # diff only the affected partitions — untouched ones are
@@ -4378,7 +4306,7 @@ class TableStore:
                 pre,
                 post,
                 keys,
-                include_deletes=(policy == "upsert_delete"),
+                include_deletes=tombs is not None,
                 stage_to=full,
             )
         final = self._commit_pointer_or_rebase(
@@ -4399,28 +4327,54 @@ class TableStore:
         policy: str = "insert_only",
         **kwargs,
     ) -> None:
-        """Apply a merge policy and persist. Policies: insert_only,
-        scd1, conditional_update, full_upsert, cdc_versioned (kwargs
-        forwarded; cdc_versioned requires ``seq_col`` and applies
-        I/U/D changelogs order-robustly — see ``apply_cdc_versioned``),
-        scd2 (requires ``seq_col``, optional ``tiebreak_col``;
-        maintains a full-history version table order-robustly — see
-        ``scd2_merge_batch``), upsert_delete (requires
-        ``tombs=<DataFrame of key column(s)>``: ONE commit deletes the
-        tomb keys AND full-upserts ``source`` — the mixed-CDC-batch
-        shape; a separate delete + merge pays two full commit cycles
-        of write amplification for the same state, and the change feed
-        records the deletes ('delete' rows, post-image NULL) alongside
-        the upserts in the same commit. Keys appearing on BOTH sides
-        are deleted then upserted, i.e. the upsert wins. On a
-        COLUMN-partitioned table the tombs must also carry the
-        partition column — it is what routes each delete to its
-        partition, and the partition column is frozen per key, so the
-        caller derives it the same way the original insert did).
+        """Apply a merge policy to table ``name`` and persist it.
 
-        Tables created with ``write_partitioned`` take the
+        The policies and their arguments, with required ones in
+        brackets (``MERGE_POLICIES``):
+
+        - ``insert_only``: WHEN NOT MATCHED INSERT; a new key inserts
+          one of its batch rows.
+        - ``scd1``, optional ``order_col``: the newest record per key
+          wins; with ``order_col`` only a strictly newer one (the
+          table wins ties).
+        - ``conditional_update`` [``update_condition``,
+          ``update_cols``]: WHEN MATCHED AND ``update_condition(a, b)``
+          (target and source aliased "a"/"b") UPDATE SET
+          ``update_cols``, WHEN NOT MATCHED INSERT *.
+        - ``full_upsert``, optional ``update_cols``: WHEN MATCHED
+          UPDATE SET ``update_cols``, WHEN NOT MATCHED INSERT; every
+          column updates when they are omitted, which is ``scd1``.
+        - ``upsert_delete`` [``tombs``], optional ``update_cols``: ONE
+          commit deletes the keys of ``tombs`` AND full-upserts
+          ``source`` — the mixed-CDC-batch shape; a separate delete +
+          merge pays two full commit cycles of write amplification for
+          the same state, and the change feed records the deletes
+          ('delete' rows, post-image NULL) alongside the upserts in the
+          same commit. Keys appearing on BOTH sides are deleted then
+          upserted, i.e. the upsert wins. On a COLUMN-partitioned table
+          the tombs must also carry the partition column — it is what
+          routes each delete to its partition, and the partition column
+          is frozen per key, so the caller derives it the same way the
+          original insert did.
+        - ``cdc_versioned`` [``seq_col``]: applies I/U/D changelogs
+          order-robustly, keeping delete tombstones (see
+          ``apply_cdc_versioned``).
+        - ``scd2`` [``seq_col``], optional ``tiebreak_col``: maintains
+          a full-history version table order-robustly (see
+          ``scd2_merge_batch``).
+
+        An unknown policy, a missing required argument, ``tombs``
+        without ``upsert_delete`` or ``evolve_schema`` with it raise
+        ``ValueError`` here, before anything is read or written.
+
+        One dispatch, ``plan_merge``, plans every policy on every
+        path. A table's first merge plans against an empty table, so
+        it commits what merging the batch into an existing empty table
+        would. Tables created with ``write_partitioned`` (or declared
+        with ``declare_partitioning`` before their first merge) take the
         partition-pruned path: only partitions containing source keys
         are rewritten (O(affected) write amplification, not O(table)).
+        Other tables are rewritten whole.
 
         ``evolve_schema=True`` enables schema evolution (the Delta
         ``autoMerge`` analog): new source columns become new table
@@ -4429,30 +4383,20 @@ class TableStore:
         read time), and a source missing target columns inserts NULLs
         there instead of erroring.
         """
-        if policy == "upsert_delete":
-            # validate BEFORE dispatching so every path — partitioned,
-            # unpartitioned, create — gives the documented errors: a
-            # missing tombs must be this ValueError (the unpartitioned
-            # branch used to KeyError), and evolve_schema is rejected
-            # uniformly (the partitioned path enforced it; the
-            # unpartitioned path silently half-applied it to the
-            # source while never aligning the tombs)
-            if kwargs.get("tombs") is None:
-                raise ValueError(
-                    "policy='upsert_delete' requires tombs=<DataFrame of "
-                    "key column(s) to delete>"
-                )
-            if kwargs.get("evolve_schema"):
-                raise ValueError(
-                    "evolve_schema is not supported with upsert_delete"
-                )
-        if policy in ("cdc_versioned", "scd2") and not kwargs.get("seq_col"):
-            # same uniformity: a missing ordering column is the
-            # documented ValueError on every path, never a KeyError
+        required = MERGE_POLICIES.get(policy)
+        if required is None:
             raise ValueError(
-                f"policy={policy!r} requires seq_col=<monotonic ordering "
-                "column> — order-robust application needs it"
+                f"unknown merge policy {policy!r}; expected one of "
+                f"{sorted(MERGE_POLICIES)}"
             )
+        for arg, what in required.items():
+            if not kwargs.get(arg):
+                raise ValueError(f"policy={policy!r} requires {arg}={what}")
+        if policy != "upsert_delete" and kwargs.get("tombs") is not None:
+            raise ValueError("tombs is only valid with policy='upsert_delete'")
+        if policy == "upsert_delete" and kwargs.get("evolve_schema"):
+            # the tombs would never be aligned to the evolved schema
+            raise ValueError("evolve_schema is not supported with upsert_delete")
         # identity / generated columns the batch lacks are computed
         # HERE, before partition routing derives from them (identity
         # first — matched keys inherit their target id, new rows draw
@@ -4474,97 +4418,49 @@ class TableStore:
         source: DataFrame,
         keys: Sequence[str],
         policy: str,
-        **kwargs,
+        tombs: DataFrame | None = None,
+        evolve_schema: bool = False,
+        **policy_args,
     ) -> None:
         source = self._apply_generated(name, source)
         spec = self.partition_spec(name)
-        if spec is not None and self.exists(name):
-            self._merge_partitioned(name, source, keys, policy, spec, **kwargs)
+        exists = self.exists(name)
+        if spec is not None and exists:
+            self._merge_partitioned(
+                name, source, keys, policy, spec, tombs, evolve_schema,
+                **policy_args,
+            )
             return
-        evolve = kwargs.pop("evolve_schema", False)
-        if not self.exists(name):
-            base = source
-            if policy == "scd1" and kwargs.get("order_col"):
-                base = latest_by_key(source, keys, kwargs["order_col"])
-            elif policy in ("insert_only",):
-                base = source.dropDuplicates(list(keys))
-            elif policy == "scd2":
-                base = scd2_from_changes(
-                    source,
-                    keys,
-                    kwargs["seq_col"],
-                    tiebreak_col=kwargs.get("tiebreak_col"),
-                )
+        tomb_keys = tombs.select(*keys).distinct() if tombs is not None else None
+        if not exists:
+            merged = plan_merge(policy, None, source, keys, tomb_keys, **policy_args)
             if spec is not None:
                 # declared-ahead spec (declare_partitioning): create
                 # the table partitioned so merge #2 onward is pruned
                 if spec["mode"] == "hash":
                     part_col = "__bucket"
-                    base = base.withColumn(
-                        part_col, self._partition_expr(spec, keys)
-                    )
+                    merged = merged.withColumn(part_col, self._partition_expr(spec, keys))
                 else:
                     part_col = spec["column"]
-                base = base.repartitionByRange(
-                    F.col(part_col), F.col(keys[0])
-                )
-                self.write(
-                    name, base, partition_by=[part_col],
-                    _op=f"create:{policy}",
-                )
+                merged = merged.repartitionByRange(F.col(part_col), F.col(keys[0]))
+                self.write(name, merged, partition_by=[part_col], _op=f"create:{policy}")
                 self._write_file_stats(self.current_path(name), keys[0])
             else:
-                self.write(name, base, _op=f"create:{policy}")
+                self.write(name, merged, _op=f"create:{policy}")
             return
         # snapshot BEFORE constructing the merge plan: current_path is
         # resolved eagerly inside read(), so the plan is pinned to this
         # version and the commit must be conditional on exactly it
         old_path = self.current_path(name)
         target = self._read_version(old_path).drop("__bucket")
-        if evolve:
+        if evolve_schema:
             target, source = align_for_evolution(target, source)
-        if policy == "insert_only":
-            merged = merge_insert_only(target, source, keys)
-        elif policy == "scd1":
-            merged = merge_scd1(target, source, keys, kwargs.get("order_col"))
-        elif policy == "conditional_update":
-            merged = merge_conditional_update(target, source, keys, **kwargs)
-        elif policy == "full_upsert":
-            merged = merge_full_upsert(target, source, keys, kwargs.get("update_cols"))
-        elif policy == "upsert_delete":
-            from .joins import maybe_broadcast
-
-            t_keys = kwargs["tombs"].select(*keys).distinct()
-            merged = merge_full_upsert(
-                target.join(maybe_broadcast(t_keys), list(keys), "left_anti"),
-                source,
-                keys,
-                kwargs.get("update_cols"),
-            )
-        elif policy == "cdc_versioned":
-            merged = apply_cdc_versioned(
-                target,
-                source,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("op_col", "op"),
-                kwargs.get("delete_op", "D"),
-            )
-        elif policy == "scd2":
-            merged = scd2_merge_batch(
-                target,
-                source,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("tiebreak_col"),
-            )
-        else:
-            raise ValueError(f"unknown policy {policy!r}")
+        merged = plan_merge(policy, target, source, keys, tomb_keys, **policy_args)
         # materialize before the pointer flip; the new version dir is
         # written from the merged plan which still reads the old
         # version. Change rows stage inside write()'s pre-flip window
         # (crash-atomic CDF): the diff reads the new dir directly —
-        # the same frame the old post-commit read produced
+        # the same frame a post-commit read would produce
         stage = None
         if self._changelog_enabled(name):
             stage = lambda full: self._log_merge_changes(  # noqa: E731
@@ -4572,7 +4468,7 @@ class TableStore:
                 self._read_version(old_path),
                 self._read_version(full).drop("__bucket"),
                 keys,
-                include_deletes=(policy == "upsert_delete"),
+                include_deletes=tombs is not None,
                 stage_to=full,
             )
         self.write(
@@ -4584,7 +4480,6 @@ class TableStore:
             _based_on=os.path.basename(old_path) if old_path else None,
             _stage=stage,
         )
-
 
     def versions(self, name: str) -> list[str]:
         """Version directory names surviving retention, oldest →

@@ -69,22 +69,6 @@ def stopword_ratio(
     return F.size(stops) / F.size(toks)
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword band.
-
-    score = 0.5·(20 ≤ n_tokens ≤ 1000) + 0.3·(0.05 ≤ stop_ratio ≤ 0.6)
-          + 0.2·(avg_token_len between 2 and 12)
-    """
-    n = token_count(text)
-    sr = stopword_ratio(text)
-    al = avg_token_length(text)
-    return (
-        F.when((n >= 20) & (n <= 1000), F.lit(0.5)).otherwise(F.lit(0.0))
-        + F.when((sr >= 0.05) & (sr <= 0.6), F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.when((al >= 2) & (al <= 12), F.lit(0.2)).otherwise(F.lit(0.0))
-    )
-
-
 def lang_scores(text: Column | str) -> dict[str, Column]:
     """Marker-word hit count per language over the token set."""
     toks = tokens(text)

@@ -23,7 +23,7 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -542,14 +542,6 @@ def finalize_running_totals(sink: DataFrame, key: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def run_stream_once(
-    build: Callable[[SparkSession], DataFrame],
-    spark: SparkSession,
-    output_mode: str = "append",
-) -> DataFrame:
-    return run_stream_to_memory(build(spark), output_mode=output_mode)
 
 
 def stateful_running_totals_tws(

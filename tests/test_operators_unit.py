@@ -2543,6 +2543,27 @@ def test_tablestore_merge_cdc_versioned_policy(spark, tmp_path):
     }
     assert live2 == live
 
+    # a table's FIRST batch commits what merging it into an existing
+    # empty table does — one row per key, on a plain and on a
+    # declared-partitioned table alike
+    first = spark.createDataFrame(
+        [(1, "a", 10, "U"), (1, "b", 20, "U"), (2, "c", 5, "U"), (2, "d", 6, "D")],
+        "k long, v string, seq long, op string",
+    )
+    store.declare_partitioning("declared", keys=["k"], n_buckets=4)
+    store.write("empty", first.limit(0))
+    for t in ("empty", "plain", "declared"):
+        store.merge(t, first, ["k"], policy="cdc_versioned", seq_col="seq")
+        got = sorted(map(tuple, store.read(t).select(*first.columns).collect()))
+        assert got == [(1, "b", 20, "U"), (2, "d", 6, "D")], t
+    # the window-shaped upserts without an ordering column keep one
+    # row per key on create too
+    for policy in ("scd1", "full_upsert"):
+        store.declare_partitioning(f"declared_{policy}", keys=["k"], n_buckets=4)
+        for t in (f"plain_{policy}", f"declared_{policy}"):
+            store.merge(t, first, ["k"], policy=policy)
+            assert sorted(r["k"] for r in store.read(t).collect()) == [1, 2], t
+
 
 def test_round4_null_edges(spark):
     """NULL-input contracts of the round-4 operators (the ADVICE.md
@@ -5795,6 +5816,19 @@ def test_merge_upsert_delete_validation_all_paths(spark, tmp_path):
     for policy in ("cdc_versioned", "scd2"):
         with pytest.raises(ValueError, match="requires seq_col"):
             store.merge("t", src, ["k"], policy=policy)
+    # an unknown or under-specified policy is refused before anything
+    # is written, on new plain and new declared-partitioned tables
+    store.declare_partitioning("new_declared", keys=["k"], n_buckets=4)
+    for t in ("new_plain", "new_declared"):
+        with pytest.raises(ValueError, match="unknown merge policy 'upsertt'"):
+            store.merge(t, src, ["k"], policy="upsertt")
+        with pytest.raises(ValueError, match="requires seq_col"):
+            store.merge(t, src, ["k"], policy="cdc_versioned")
+        with pytest.raises(ValueError, match="requires update_condition"):
+            store.merge(t, src, ["k"], policy="conditional_update")
+        with pytest.raises(ValueError, match="only valid with policy='upsert_delete'"):
+            store.merge(t, src, ["k"], policy="scd1", tombs=src.select("k"))
+        assert not store.exists(t)
 
 
 def test_rebase_unions_both_parents_sidecars(spark, tmp_path):
